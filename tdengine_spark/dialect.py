@@ -6657,13 +6657,24 @@ def _validate_insert_ranges(db, target, schema, data) -> None:
 
 def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
     """``INSERT INTO tbl [USING stable [(tagcols)] TAGS(...)] [(cols)]
-    VALUES (...)[(...)…]`` (grammar sql.y INSERT rules; the reference's
-    parser bypasses the planner the same way — parInsertSql.c). Appends
-    to the table's parquet dataset; returns the row count written.
+    VALUES (...)[(...)…] [tbl2 … VALUES (...)…]`` (grammar sql.y INSERT
+    rules; the reference's parser bypasses the planner the same way —
+    parInsertSql.c). Appends to the tables' parquet datasets; returns
+    the row count written.
 
     USING = child-table insert: rows land in the SUPER table's dataset
     with ``tbname`` = the child name and the tag columns set from TAGS —
     the reference's child-table→super-table row mapping.
+
+    A multi-table statement is parsed and validated whole before
+    anything is written, then each target dataset (the super table a
+    child routes to) gets ONE write of all its rows, in statement order
+    — the reference builds one submit request per vgroup, not per child
+    (parInsertSql.c). So a bad literal anywhere writes nothing, and the
+    children it would have auto-created (USING) stay unregistered.
+    Exception: a target with no dataset yet (create-on-first-insert) is
+    written as soon as its segment parses, since a later segment may
+    need the schema that write creates.
     """
     fm = re.match(
         r"(?is)^\s*INSERT\s+INTO\s+([\w.]+)\s+FILE\s+'([^']+)'\s*;?\s*$",
@@ -6681,15 +6692,47 @@ def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
             spark, db, f"INSERT INTO {fm.group(1)} VALUES {groups}"
         )
     hm = re.match(r"(?is)^\s*INSERT\s+INTO\s+(.*)$", sql.strip().rstrip(";"))
-    if hm:
-        segs = _split_depth0_segments(hm.group(1))
-        if len(segs) > 1:
-            # multi-table insert (parInsertSql.c: one VALUES run per
-            # target): dispatch each segment independently
-            return sum(
-                translate_insert(spark, db, f"INSERT INTO {seg}")
-                for seg in segs
-            )
+    segs = _split_depth0_segments(hm.group(1)) if hm else []
+    # multi-table insert (parInsertSql.c: one VALUES run per target)
+    stmts = [f"INSERT INTO {seg}" for seg in segs] if len(segs) > 1 else [sql]
+    known = set(db.tables)
+    schemas: dict = {}
+    pending: dict = {}
+    written = set()
+    n, next_ver = 0, 0
+    try:
+        for stmt in stmts:
+            parsed = _parse_insert_segment(spark, db, stmt, schemas, next_ver)
+            if parsed is None:
+                continue
+            target, schema, data, cols = parsed
+            n += len(data)
+            next_ver = data[-1]["_version"] + 1
+            if schema is None:
+                # create-on-first-insert: a later segment needs the
+                # schema this write creates
+                _write_insert_rows(spark, db, target, None, data, cols[0])
+                written.add(target)
+            else:
+                pending.setdefault(target, (schema, []))[1].extend(data)
+    except Exception:
+        # a failed statement auto-creates no child table
+        for cn in set(db.tables) - known:
+            if db.tables[cn].parent and db.tables[cn].parent not in written:
+                del db.tables[cn]
+        raise
+    for target, (schema, data) in pending.items():
+        _write_insert_rows(spark, db, target, schema, data)
+    return n
+
+
+def _parse_insert_segment(spark, db, sql, schemas, min_ver):
+    """Parse and validate one single-target INSERT: resolve the target
+    dataset, parse the literals, register a USING child, stamp each row
+    with its ``_version`` (from ``min_ver`` up, so a later segment wins
+    keep-last) and range-check it. ``schemas`` caches each target's
+    read schema for the statement. Returns ``(target, schema, data,
+    cols)``, or None for an INSERT-SELECT that selected no rows."""
     sm = re.match(
         r"(?is)^\s*INSERT\s+INTO\s+([\w.]+)\s*"
         r"(?:\(\s*(?!select\b)(?P<cl>[^()]*)\)\s*)?"
@@ -6712,7 +6755,7 @@ def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
              "table": sm.group(1), "tags": None, "tagcols": None}
         rows = [list(r) for r in vals]
         if not rows:
-            return 0
+            return None
     else:
         m = _INSERT_RE.match(sql)
         if not m:
@@ -6736,18 +6779,14 @@ def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
             dict(zip(parent.tag_cols, reg.tag_values))
         )
         target = reg.parent
-    path = f"{db.root}/{target}.parquet"
     import os
 
-    schema = None
-    if os.path.exists(path):
+    schema = schemas.get(target)
+    if schema is None and os.path.exists(f"{db.root}/{target}.parquet"):
         # evolved (post-ALTER) schema: overlay columns are insertable
-        schema = db.table(target).read(spark).schema
+        schema = schemas[target] = db.table(target).read(spark).schema
 
     extra = dict(child_tags)
-    import time as _time
-
-    extra["_version"] = _time.time_ns()
     if g["stable"]:
         extra["tbname"] = g["table"].split(".")[-1]
         tagvals = [_parse_literal(t) for t in _split_select(g["tags"])]
@@ -6787,20 +6826,32 @@ def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
             raise ValueError(
                 "INSERT without a column list needs an existing table schema"
             )
-        cols = [f.name for f in schema if f.name not in extra]
+        cols = [f.name for f in schema
+                if f.name not in extra and f.name != "_version"]
         cols = cols[: len(rows[0])]
-    # per-ROW version: within one INSERT statement, a later VALUES group
-    # overwrites an earlier one at the same (tbname, ts) (reference
-    # parInsertSql.c processes groups in order into the memtable) — a
-    # shared stamp would leave keep-last dedup tied and arbitrary
-    base_ver = extra.pop("_version")
+    # per-ROW version: a later VALUES group overwrites an earlier one at
+    # the same (tbname, ts) (reference parInsertSql.c processes groups
+    # in order into the memtable) — a shared stamp would leave keep-last
+    # dedup tied and arbitrary. ``min_ver`` carries the order across
+    # the segments of one statement.
+    import time as _time
+
+    base_ver = max(_time.time_ns(), min_ver)
     data = [
         dict(zip(cols, r), **extra, _version=base_ver + i)
         for i, r in enumerate(rows)
     ]
-    extra["_version"] = base_ver
     if schema is not None:
         _validate_insert_ranges(db, target, schema, data)
+    return target, schema, data, cols
+
+
+def _write_insert_rows(spark, db, target, schema, data, first_col=None):
+    """Append parsed INSERT rows to ``target``'s dataset in one write.
+    With a ``schema`` the literals are coerced to it; without one
+    (create-on-first-insert) the frame is inferred from the rows and
+    ``first_col`` — the primary key — is cast to timestamp."""
+    path = f"{db.root}/{target}.parquet"
     if schema is not None:
         # route literals through strings + cast: '2024-…' → timestamp,
         # '1.5' → double, etc., exactly as the reference parser coerces
@@ -6817,79 +6868,43 @@ def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
             tuple(None if d.get(n) is None else str(d.get(n)) for n in names)
             for d in data
         ]
-        df = spark.createDataFrame(str_rows, str_schema)
-        from pyspark.sql.types import IntegralType as _IntT
-        from pyspark.sql.types import TimestampType as _TsT
 
-        for f in out_fields:
-            if isinstance(f.dataType, _TsT):
-                # bare integer VALUES literal for a timestamp column =
-                # epoch in the db precision; magnitude-disambiguated the
-                # same way as _epoch_expr (ms until 1e14, us until 1e17,
-                # ns above — ns floors to Spark's us-precision storage)
-                v = F.col(f.name).cast("bigint")
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name).rlike(r"^-?\d+$"),
-                        F.when(
-                            F.abs(v) < F.lit(10**14), F.timestamp_millis(v)
-                        ).when(
-                            F.abs(v) < F.lit(10**17), F.timestamp_micros(v)
-                        ).otherwise(
-                            # integer div: a double round-trip loses
-                            # precision above 2^53
-                            F.timestamp_micros(
-                                F.expr(
-                                    f"cast(`{f.name}` as bigint) div 1000"
-                                )
-                            )
-                        ),
-                    ).otherwise(F.col(f.name).cast("timestamp")),
-                )
-            elif isinstance(f.dataType, _IntT):
+        def _coerce(f):
+            c = F.col(f.name)
+            if isinstance(f.dataType, T.IntegralType):
                 # decimal literal into an integer column ROUNDS half-away
                 # (reference VALUES coercion — orderbyOtherTS inserts
                 # 215+num/15 into INT and expects 247.53 → 248); integer
                 # literals cast directly (decimal(38,10) keeps int64 exact)
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name).rlike(r"^-?\d+(\.\d+)?([eE][+-]?\d+)?$")
-                        & F.col(f.name).contains("."),
-                        F.round(
-                            F.col(f.name).cast("decimal(38,10)"), 0
-                        ).cast(f.dataType),
-                    ).otherwise(F.col(f.name).cast(f.dataType)),
-                )
-            elif isinstance(f.dataType, T.BinaryType):
+                return F.when(
+                    c.rlike(r"^-?\d+(\.\d+)?([eE][+-]?\d+)?$") & c.contains("."),
+                    F.round(c.cast("decimal(38,10)"), 0).cast(f.dataType),
+                ).otherwise(c.cast(f.dataType)).alias(f.name)
+            if isinstance(f.dataType, T.BinaryType):
                 # VARBINARY input: 0x-prefixed literals are hex bytes,
                 # anything else stores its utf-8 bytes (reference
                 # taosHex2Ascii VALUES coercion)
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name).rlike("^0[xX][0-9a-fA-F]*$"),
-                        F.unhex(F.expr(
-                            f"substring(`{f.name}`, 3)"
-                        )),
-                    ).otherwise(F.col(f.name).cast("binary")),
-                )
-            elif isinstance(f.dataType, T.BooleanType):
+                return F.when(
+                    c.rlike("^0[xX][0-9a-fA-F]*$"),
+                    F.unhex(F.expr(f"substring(`{f.name}`, 3)")),
+                ).otherwise(c.cast("binary")).alias(f.name)
+            if isinstance(f.dataType, T.BooleanType):
                 # numeric literal into BOOL is C truthiness (reference
                 # VALUES coercion, atoi: nonzero → true); Spark's
                 # string→boolean cast rejects "5" as NULL
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name).rlike(
-                            r"^-?\d+(\.\d+)?([eE][+-]?\d+)?$"
-                        ),
-                        F.col(f.name).cast("double") != 0,
-                    ).otherwise(F.col(f.name).cast("boolean")),
-                )
-            else:
-                df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
+                return F.when(
+                    c.rlike(r"^-?\d+(\.\d+)?([eE][+-]?\d+)?$"),
+                    c.cast("double") != 0,
+                ).otherwise(c.cast("boolean")).alias(f.name)
+            # timestamps: a bare integer literal is an epoch in the db
+            # precision (magnitude-disambiguated); anything else casts
+            return _lit_cast(f.name, f.dataType)
+
+        # every value is a str or None by construction: skip the
+        # per-row type verification
+        df = spark.createDataFrame(
+            str_rows, str_schema, verifySchema=False
+        ).select(*[_coerce(f) for f in out_fields])
         # evolved columns write to their PHYSICAL names: versioned
         # generations, and renamed columns back to their on-disk name
         ov = db.table(target).load_overlay()
@@ -6903,11 +6918,9 @@ def translate_insert(spark: SparkSession, db: Database, sql: str) -> int:
         df = spark.createDataFrame(data)
         # create-on-first-insert: the reference's first column is always
         # the TIMESTAMP primary key — literals arrive as strings
-        first = cols[0]
-        if dict(df.dtypes).get(first) == "string":
-            df = df.withColumn(first, F.col(first).cast("timestamp"))
+        if dict(df.dtypes).get(first_col) == "string":
+            df = df.withColumn(first_col, F.col(first_col).cast("timestamp"))
     df.write.mode("append").parquet(path)
-    return len(rows)
 
 
 #: TDengine column types → Spark (taosdef.h type table)

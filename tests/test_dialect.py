@@ -473,6 +473,108 @@ def test_create_stable_then_insert_select(spark, tmp_path):
     assert desc["location"] == "VARCHAR"
 
 
+def _meters(spark, tmp_path, children=2):
+    """A dialect-managed ``meters`` super table with pre-declared
+    children d0…d{children-1}."""
+    from tdengine_spark.dialect import execute
+
+    db = Database(root=str(tmp_path))
+    execute(
+        spark, db,
+        "CREATE STABLE meters (ts TIMESTAMP, current FLOAT, voltage INT) "
+        "TAGS (groupid INT, location VARCHAR(24))",
+    )
+    for i in range(children):
+        execute(spark, db, f"CREATE TABLE d{i} USING meters TAGS ({i}, 'loc{i}')")
+    return db
+
+
+def test_multi_table_insert_all_or_nothing(spark, tmp_path):
+    """A bad literal in any segment fails the whole statement: nothing
+    is written and no USING child is auto-created (the reference parses
+    the statement into its submit requests before sending any)."""
+    import pytest as _pt
+
+    from tdengine_spark.dialect import execute
+
+    db = _meters(spark, tmp_path)
+    with _pt.raises(ValueError, match="out of range"):
+        execute(
+            spark, db,
+            "INSERT INTO d0 VALUES ('2024-01-01 00:00:00', 1.5, 220) "
+            "d1 VALUES ('2024-01-01 00:00:00', 2.5, 3000000000)",
+        )
+    with _pt.raises(ValueError, match="out of range"):
+        execute(
+            spark, db,
+            "INSERT INTO d9 USING meters TAGS (9, 'loc9') "
+            "VALUES ('2024-01-01 00:00:00', 1.5, 220) "
+            "d1 VALUES ('2024-01-01 00:00:00', 2.5, 3000000000)",
+        )
+    assert execute(spark, db, "SELECT count(*) AS n FROM meters").first().n == 0
+    assert "d9" not in db.tables
+
+
+def test_multi_table_insert_semantics(spark, tmp_path):
+    """One statement mixing pre-declared children, a USING auto-created
+    child and the same child twice: rows route by child with its tags,
+    and the later segment wins a duplicate ts (keep-last)."""
+    from tdengine_spark.dialect import execute
+
+    db = _meters(spark, tmp_path)
+    n = execute(
+        spark, db,
+        "INSERT INTO d0 VALUES ('2024-01-01 00:00:00', 1.0, 220)"
+        "('2024-01-01 00:00:10', 1.1, 221) "
+        "d1 VALUES ('2024-01-01 00:00:00', 2.0, 222) "
+        "d2 USING meters TAGS (7, 'la') VALUES ('2024-01-01 00:00:00', 3.0, 223)"
+        "('2024-01-01 00:00:10', 3.1, 224)('2024-01-01 00:00:20', 3.2, 225) "
+        "d0 VALUES ('2024-01-01 00:00:10', 9.5, 229)",
+    )
+    assert n == 7
+    got = {
+        r.tbname: (r.n, r.groupid, r.location)
+        for r in execute(
+            spark, db,
+            "SELECT tbname, count(*) AS n, first(groupid) AS groupid, "
+            "first(location) AS location FROM meters PARTITION BY tbname",
+        ).collect()
+    }
+    assert got == {"d0": (2, 0, "loc0"), "d1": (1, 1, "loc1"), "d2": (3, 7, "la")}
+    assert db.tables["d2"].parent == "meters"
+    d0 = execute(spark, db, "SELECT ts, current, voltage FROM d0 ORDER BY ts").collect()
+    assert [(round(r.current, 2), r.voltage) for r in d0] == [(1.0, 220), (9.5, 229)]
+
+
+def test_multi_table_insert_one_write_per_target(spark, tmp_path):
+    """A 3-child INSERT adds as many parquet files to ``meters`` as a
+    1-child INSERT: one write per target dataset, not one per child."""
+    import glob
+
+    from tdengine_spark.dialect import execute
+
+    db = _meters(spark, tmp_path, children=3)
+    # enough rows per child that every write task gets some
+    k = 2 * spark.sparkContext.defaultParallelism
+
+    def files():
+        return len(glob.glob(f"{tmp_path}/meters.parquet/*.parquet"))
+
+    def seg(child, minute):
+        vals = "".join(
+            f"('2024-01-01 00:{minute:02d}:00.{i:03d}', 1.5, 220)" for i in range(k)
+        )
+        return f"d{child} VALUES {vals}"
+
+    f0 = files()
+    execute(spark, db, "INSERT INTO " + seg(0, 0))
+    f1 = files()
+    execute(spark, db, "INSERT INTO " + " ".join(seg(c, 1) for c in range(3)))
+    f3 = files()
+    assert f1 - f0 == f3 - f1
+    assert execute(spark, db, "SELECT count(*) AS n FROM meters").first().n == 4 * k
+
+
 def test_right_window_join_dialect(spark):
     """RIGHT WINDOW JOIN ≡ swapped LEFT with negated offsets."""
     rgt = translate(
