@@ -12,9 +12,31 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_SHUFFLE_PARTITIONS = int(_CPUS)
+
+
+def _master_is_set() -> bool:
+    """Whether a master was chosen outside this module: ``$SPARK_MASTER``,
+    a running SparkContext, or a launcher's ``--master``.
+
+    A launcher (``spark-submit``, the ``pyspark`` shell) starts the JVM
+    first and hands this process its gateway port; its ``--master``
+    reaches ``SparkConf`` only through that gateway. A gateway this
+    process launches itself always reports ``local[*]`` (spark-submit's
+    default), so the conf is read only behind a launcher's gateway.
+    Under a launcher that was given no ``--master``, its ``local[*]``
+    stands.
+    """
+    if os.environ.get("SPARK_MASTER") or SparkContext._active_spark_context:
+        return True
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return False
+    SparkContext._ensure_initialized()
+    return SparkConf().contains("spark.master")
 
 
 def get_spark(
@@ -32,7 +54,6 @@ def get_spark(
       - Arrow enabled: every pandas_udf / applyInPandas crossing is
         Arrow-batched, never per-row pickled.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -65,16 +86,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    # Only defer to an externally-owned master when one is EXPLICITLY
-    # configured ($SPARK_MASTER — a cluster submitter owns it). The old
-    # additional `SPARK_ENV_LOADED not in os.environ` escape meant any
-    # shell that had sourced spark-env.sh silently dropped local[{cpus}]
-    # — $SPARK_GRAFT_CPUS then only reached shuffle partitions, breaking
-    # the bench's low-core scaling contract (r14 verdict:
-    # suspect_cpus_ignored). spark-env.sh does not set a master by
-    # itself, so honoring $SPARK_GRAFT_CPUS there is correct.
-    if not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    # local[$SPARK_GRAFT_CPUS] only when nobody else chose a master. A
+    # shell that merely sourced spark-env.sh ($SPARK_ENV_LOADED) has not
+    # chosen one, so it still gets local[cpus] (r14 verdict:
+    # suspect_cpus_ignored).
+    if not _master_is_set():
+        builder = builder.master(f"local[{_CPUS}]")
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -10,7 +10,12 @@
 4. interp must not pair a sample's timestamp with an older sample's
    value when the sample's value is NULL.
 5. dialect agg rewrites must handle nested calls and string literals.
+6. get_spark must not override the master a launcher was given.
 """
+
+import os
+import shutil
+import subprocess
 
 import pandas as pd
 import pytest
@@ -609,3 +614,23 @@ def test_interp_epoch_us_strict_iso_gate():
     assert _epoch_us("2024/01/05") is None
     assert _epoch_us("20240105") is None
     assert _epoch_us(5) is None  # numerics already routed to union
+
+
+def test_get_spark_keeps_submitted_master(tmp_path):
+    """``spark-submit --master local[2]`` wins over get_spark's
+    local[$SPARK_GRAFT_CPUS] default."""
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from tdengine_spark.session import get_spark\n"
+        "print('MASTER=' + get_spark('submit-probe').sparkContext.master)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_MASTER"}
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [shutil.which("spark-submit"), "--master", "local[2]", str(script)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert "MASTER=local[2]" in out.stdout.splitlines(), out.stderr[-2000:]

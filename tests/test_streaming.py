@@ -4,7 +4,9 @@ source (events parquet replayed as arriving files) and availableNow."""
 import os
 import shutil
 import tempfile
+import time
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from tdengine_spark.streaming.stream import (
     interval_trigger,
     read_stream,
     session_trigger,
+    write_into,
 )
 
 SRC = "/root/testdata/sf0.001/events.parquet"
@@ -58,6 +61,36 @@ def ordered_stream_dir(spark):
         _time.sleep(0.05)  # distinct mtimes → deterministic pickup order
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+def _arrival_rows(d):
+    """The ordered replay's rows as the state kernels see them: each
+    user's rows in ts order, ties kept in file order."""
+    pdf = pd.concat(
+        [pd.read_parquet(f"{d}/in/data_{i}.parquet") for i in range(4)],
+        ignore_index=True,
+    )
+    return pdf.sort_values(["user_id", "ts"], kind="mergesort")
+
+
+def _replay_count_windows(pdf, n):
+    """Tumbling COUNT_WINDOW(n) per user: (k, _wstart, _wend, n_rows,
+    sum_value) of every complete block of n rows."""
+    want = []
+    for uid, g in pdf.groupby("user_id"):
+        ts, v = g["ts"].tolist(), g["value"].tolist()
+        for i in range(n, len(v) + 1, n):
+            want.append(
+                (str(uid), ts[i - n], ts[i - 1], n, round(sum(v[i - n : i]), 4))
+            )
+    return sorted(want)
+
+
+def _count_rows(rows):
+    return sorted(
+        (r.k, pd.Timestamp(r._wstart), pd.Timestamp(r._wend), r.n_rows, r.sum_value)
+        for r in rows
+    )
 
 
 def _run_available_now(result, d, name):
@@ -116,23 +149,49 @@ def test_session_trigger(spark, stream_dir):
     assert got.where(F.col("n") < 1).count() == 0
 
 
-def test_count_window_trigger(spark, stream_dir):
-    schema = spark.read.parquet(f"{stream_dir}/in").schema
-    src = read_stream(spark, f"{stream_dir}/in", schema, max_files_per_trigger=1)
+def test_count_window_trigger(spark, ordered_stream_dir):
+    d = ordered_stream_dir
+    schema = spark.read.parquet(f"{d}/in").schema
+    src = read_stream(spark, f"{d}/in", schema, max_files_per_trigger=1)
     result = count_window_trigger(src, "ts", 50, "user_id", "value")
-    _run_available_now(result, stream_dir, "cw")
-    got = spark.sql("SELECT * FROM cw")
-    n = got.count()
-    assert n > 0
-    # every emitted window has exactly 50 rows
-    assert got.where(F.col("n_rows") != 50).count() == 0
-    # total windows ≈ floor(rows_per_user/50) summed
-    import math
-    per_user = (
-        spark.read.parquet(f"{stream_dir}/in").groupBy("user_id").count().collect()
+    _run_available_now(result, d, "cw")
+    got = _count_rows(spark.sql("SELECT * FROM cw").collect())
+    assert len(got) > 0
+    assert got == _replay_count_windows(_arrival_rows(d), 50)
+
+
+def test_count_window_restart_at_other_parallelism(
+    spark, ordered_stream_dir, monkeypatch
+):
+    """A checkpointed COUNT_WINDOW query restarted under another
+    parallelism keeps every key's open window: what both runs wrote
+    equals the replay of all four files."""
+    from pyspark import SparkContext
+
+    d = ordered_stream_dir
+    arrive, out = f"{d}/arrive", f"{d}/out"
+    os.makedirs(arrive)
+    schema = spark.read.parquet(f"{d}/in").schema
+
+    def drain(files):
+        for i in files:
+            shutil.copy(f"{d}/in/data_{i}.parquet", arrive)
+            time.sleep(0.05)  # distinct mtimes → deterministic pickup order
+        src = read_stream(spark, arrive, schema, max_files_per_trigger=1)
+        q = write_into(
+            count_window_trigger(src, "ts", 5, "user_id", "value"),
+            out, f"{d}/ckpt", trigger={"availableNow": True},
+        )
+        q.awaitTermination(120)
+        assert not q.isActive and q.exception() is None
+
+    drain([0, 1])
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 3)
     )
-    expected = sum(math.floor(r["count"] / 50) for r in per_user)
-    assert n == expected
+    drain([2, 3])
+    got = _count_rows(spark.read.parquet(out).collect())
+    assert got == _replay_count_windows(_arrival_rows(d), 5)
 
 
 def test_latest_table(spark, stream_dir):
@@ -198,9 +257,26 @@ def test_event_window_trigger(spark, ordered_stream_dir):
     src = read_stream(spark, f"{stream_dir}/in", schema, max_files_per_trigger=1)
     result = event_window_trigger(src, "ts", "user_id", "value", 180.0, 20.0)
     _run_available_now(result, stream_dir, "ew")
-    got = spark.sql("SELECT * FROM ew")
-    assert got.count() > 0
-    assert got.where(F.col("_wend") < F.col("_wstart")).count() == 0
+    got = sorted(
+        (r.k, pd.Timestamp(r._wstart), pd.Timestamp(r._wend), r.n_rows)
+        for r in spark.sql("SELECT * FROM ew").collect()
+    )
+    # replay: a window opens at a row with value > 180 and closes,
+    # inclusive, at the first row from there with value < 20
+    want = []
+    for uid, g in _arrival_rows(stream_dir).groupby("user_id"):
+        wstart = None
+        for t, v in zip(g["ts"], g["value"]):
+            if wstart is None:
+                if not v > 180.0:
+                    continue
+                wstart, n = t, 0
+            n += 1
+            if v < 20.0:
+                want.append((str(uid), wstart, t, n))
+                wstart = None
+    assert len(got) > 0
+    assert got == sorted(want)
 
 
 def test_recalc_on_late_rows(spark, stream_dir):
