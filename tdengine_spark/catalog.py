@@ -422,69 +422,6 @@ class Database:
         )
 
 
-# session-level cache of small tag/key domains, keyed by
-# (table path, key columns). The reference keeps tag values in mnode
-# metadata and serves tag-only queries via TagScan without touching row
-# data (sysscanoperator.c / scanoperator.c:4121); the Spark analog is a
-# one-time distinct over the (column-pruned) table, collected and reused
-# for every later spine build so the fact table is scanned exactly once
-# per query plan.
-_TAG_DOMAIN_CACHE: dict = {}
-TAG_DOMAIN_CAP = 1_000_000
-
-
-def tag_domain(
-    spark: SparkSession,
-    path_or_df,
-    cols: "list[str]",
-    cap: int = TAG_DOMAIN_CAP,
-) -> "list[tuple]":
-    """Distinct values of tag/key ``cols``, as a list of tuples.
-
-    Accepts a parquet path (cached across calls — the domain of the
-    whole table is a stable catalog fact) or a DataFrame (computed
-    fresh: an arbitrary DataFrame may carry filters, so its key domain
-    is not a cacheable table property).
-    Guarded: raises if the domain exceeds ``cap`` rows — tag domains are
-    metadata-sized by definition; a million-key domain means the caller
-    should partition differently, not that we should collect it.
-    """
-    key = None
-    if isinstance(path_or_df, str):
-        key = (path_or_df, tuple(cols))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        df = spark.read.parquet(path_or_df)
-        df = _ntz_to_utc_timestamp(df)
-    else:
-        df = path_or_df
-    if key is not None and key in _TAG_DOMAIN_CACHE:
-        return _TAG_DOMAIN_CACHE[key]
-    rows = df.select(*cols).distinct().limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"tag domain for {cols} exceeds cap={cap}; "
-            "pass group_values explicitly or raise the cap"
-        )
-    out = [tuple(r) for r in rows]
-    if key is not None:
-        _TAG_DOMAIN_CACHE[key] = out
-    return out
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver's testdata tables and register temp views."""
-    db = Database(root=sf_dir)
-    out = {}
-    for n in names:
-        df = db.read(spark, n)
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out
-
-
 def information_schema(
     spark: SparkSession, dbs: dict[str, Database], view: str = "ins_tables"
 ) -> DataFrame:

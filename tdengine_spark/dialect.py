@@ -2937,26 +2937,6 @@ def _translate_interp(spark: SparkSession, db: Database, m, ts_col: str) -> Data
     if g["order"] and "_irowts_origin" in g["order"].lower():
         need_origin = True
 
-    # single-fact-scan spine: for modes that emit nothing for
-    # sample-less groups (PREV/NEXT/LINEAR/NONE), the key spine can come
-    # from the session-cached catalog tag domain — a superset of the
-    # filtered key set cannot add rows, and the fact table is scanned
-    # exactly once. The emit-every-instant modes (NEAR/NULL/VALUE) keep
-    # the filtered-distinct derivation: their output depends on exactly
-    # which groups exist under WHERE.
-    group_values = None
-    if keys and mode in ("prev", "next", "linear", "none"):
-        import os
-
-        from tdengine_spark.catalog import tag_domain
-
-        path = f"{db.root}/{g['table']}.parquet"
-        if os.path.exists(path) and all(c in base.columns for c in keys):
-            try:
-                group_values = tag_domain(spark, path, keys)
-            except ValueError:
-                group_values = None  # domain over cap: fall back
-
     out = interp(
         base, ts_col, vals, lo, hi, (g["every"] or "1s").strip(),
         mode=mode, partition_by=keys,
@@ -2965,7 +2945,6 @@ def _translate_interp(spark: SparkSession, db: Database, m, ts_col: str) -> Data
         defaults=fill_args if mode in ("prev", "next", "near") else None,
         with_origin=need_origin,
         ignore_null=ignores,
-        group_values=group_values,
     )
     if g["order"]:
         # order refs may use source names or aliases; resolve against the
@@ -8484,11 +8463,3 @@ def _extract_agg_calls(
 
 def _is_plain_col(item: str, keys: list[str]) -> bool:
     return item.strip() in keys
-
-
-def _aliases(items: list[str]) -> list[str]:
-    out = []
-    for it in items:
-        mm = re.search(r"\s+as\s+([A-Za-z_][\w]*)\s*$", it, re.IGNORECASE)
-        out.append(mm.group(1) if mm else it)
-    return out

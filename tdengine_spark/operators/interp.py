@@ -15,21 +15,29 @@ Spark-first design — the BUCKETED kernel (r14):
      is strictly later than t_{k−1}). The shuffle therefore carries at
      most one row per non-empty bucket, not one row per sample, and
      partial aggregation collapses everything map-side (guide §2.3);
-  3. the bucket rows are unioned with the instant spine and an O(n)
-     growing-frame pass over the TINY bucket+instant frame forward-
-     fills the prev tracker; modes that read the next tracker add one
-     reverse-ordered growing-frame pass (a shrinking
-     current→unboundedFollowing frame would re-aggregate per output
-     row — O(n²) per key). PREV needs only the forward pass;
-     NULL/NONE/VALUE need only the exact-hit detection it provides.
+  3. two O(n) growing-frame passes run over the bucket rows alone: a
+     forward pass carries the prev tracker, and modes that read the
+     next tracker add one reverse-ordered pass over the strictly later
+     buckets (a shrinking current→unboundedFollowing frame would
+     re-aggregate per output row — O(n²) per key). PREV needs only the
+     forward pass; NULL/NONE/VALUE need only the exact-hit detection it
+     provides;
+  4. each bucket row then explodes into the instants it owns — from
+     its own bucket up to the one before the next non-empty bucket —
+     and a group's first row also owns the instants before it, where
+     no sample is at or before the instant. The instants are made
+     after the window shuffle and sort, never inside them, and a group
+     exists exactly when it has a sample: no list of groups is needed,
+     so every mode reads the fact table once.
 
-The pre-r14 kernel unioned the RAW samples with the spine and ran both
-window passes over |samples| + |instants| rows — two full sorts of the
-fact table per query. The bucketed kernel shuffles and sorts only
-|non-empty buckets| + |instants| rows; at 100 TB the difference is the
-whole fact table. Calendar EVERY (1n/1y) has no fixed bucket width and
-non-literal RANGE bounds have no plan-time origin — both keep the
-union kernel (``_interp_union_tracks``).
+The pre-r14 kernel unioned the RAW samples with an instant spine (every
+group × every instant) and ran both window passes over |samples| +
+|instants| rows — two full sorts of the fact table per query. The
+bucketed kernel shuffles and sorts only |non-empty buckets| rows; at
+100 TB the difference is the whole fact table. Calendar EVERY (1n/1y)
+has no fixed bucket width and non-literal RANGE bounds have no
+plan-time origin — both keep the union kernel
+(``_interp_union_tracks``), the only one that builds a spine.
 
 Edge semantics follow the reference's goldens
 (test/cases/09-DataQuerying/12-Interp/ans): PREV drops instants before
@@ -67,7 +75,7 @@ def _epoch_us(v) -> "int | None":
     UTC — naive values are read as UTC, matching F.lit(...).cast).
 
     Returns None for anything whose plan-time parse could disagree with
-    the spine's ``F.lit(v).cast("timestamp")`` — numeric bounds in
+    Spark's ``F.lit(v).cast("timestamp")`` — numeric bounds in
     particular (Spark casts int/float as epoch-SECONDS, pd.Timestamp
     reads them as nanoseconds), so those route to the union kernel,
     which derives everything from F.lit and needs no plan-time value."""
@@ -82,9 +90,9 @@ def _epoch_us(v) -> "int | None":
         # strict ISO only: pandas and Spark agree on these by
         # construction; looser forms both happen to parse but can
         # disagree silently ('24-01-05' → pandas year 2024, Spark year
-        # 0024), which would misalign the bucket origin from the spine —
-        # anything else routes to the union kernel, which derives every
-        # instant from F.lit and needs no plan-time value
+        # 0024), which would move the instants off Spark's reading of
+        # the bound — anything else routes to the union kernel, which
+        # derives every instant from F.lit and needs no plan-time value
         r"\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d{1,6})?)?)?",
         v.strip(),
     ):
@@ -109,7 +117,6 @@ def interp(
     partition_by: "list[str] | None" = None,
     fill_value=None,
     out_col: "str | None" = None,
-    group_values: "list | DataFrame | None" = None,
     tolerance: "str | int | Duration | None" = None,
     defaults=None,
     with_origin: bool = False,
@@ -131,13 +138,9 @@ def interp(
     NULL.
 
     Returns (partition..., _irowts, <out cols…>, _isfilled
-    [, _irowts_origin]) ordered by (partition, _irowts).
-
-    ``group_values``: the distinct partition-key values, as a list of
-    tuples (single-key: scalars) or a DataFrame. When omitted they are
-    derived with ``df.select(keys).distinct()`` — a key-column-only
-    second scan. At scale, pass the known key set (tags usually live in
-    a tiny dimension table) so the fact table is scanned exactly once.
+    [, _irowts_origin]) ordered by (partition, _irowts). A group is
+    resampled when ``df`` has a row for it: the groups come from the
+    data itself, so the result follows from ``df`` alone.
     """
     mode = mode.lower()
     if mode not in INTERP_MODES:
@@ -154,50 +157,18 @@ def interp(
     tol_us = parse_duration(tolerance).microseconds if tolerance is not None else None
 
     # RANGE(t1, t2) with t1 > t2 is an empty instant set in the
-    # reference (not an error); sequence() constant-folds and rejects a
-    # mismatched step sign at plan time, so clamp the bounds AND blank
-    # the source (empty source → empty group set → no instants)
+    # reference (not an error); the union kernel's sequence()
+    # constant-folds and rejects a mismatched step sign at plan time,
+    # so clamp the bounds AND blank the source (no sample → no group →
+    # no instants)
     import pandas as pd
 
     try:
         if pd.Timestamp(range_start) > pd.Timestamp(range_end):
             range_end = range_start
             df = df.where(F.lit(False))
-            # an explicit group_values spine would still emit one instant
-            # (sequence(lo, lo)) per provided group — blank it too so the
-            # result is empty regardless of how groups were supplied
-            group_values = [] if keys else None
     except (ValueError, TypeError):
         pass  # non-literal bounds: let sequence() decide
-    lo = F.lit(range_start).cast("timestamp")
-    hi = F.lit(range_end).cast("timestamp")
-    step = F.expr(f"interval {every_d.interval_string()}")
-
-    if keys and group_values is not None:
-        if isinstance(group_values, DataFrame):
-            groups = group_values.select(*keys)
-        else:
-            rows = [
-                tuple(v) if isinstance(v, (tuple, list)) else (v,)
-                for v in group_values
-            ]
-            schema = df.select(*keys).schema
-            if rows:
-                # Arrow path (pandas) — a plain list createDataFrame
-                # round-trips through row-at-a-time pickling
-                groups = df.sparkSession.createDataFrame(
-                    pd.DataFrame(rows, columns=keys), schema
-                )
-            else:
-                groups = df.sparkSession.createDataFrame([], schema)
-    elif keys:
-        groups = df.select(*keys).distinct()
-    else:
-        groups = df.select(F.lit(1).alias("_g")).limit(1)
-    spine = groups.select(
-        *(keys or []),
-        F.explode(F.sequence(lo, hi, step)).alias("_t"),
-    ).withColumn("_side", F.lit(1))
 
     ignores = _as_list(ignore_null, nv, fill=True)
     # which side-trackers this mode actually reads — the other side's
@@ -208,11 +179,12 @@ def interp(
     hi_us = _epoch_us(range_end)
     if every_d.is_calendar or lo_us is None or hi_us is None:
         staged = _interp_union_tracks(
-            df, ts_col, vals, keys, spine, ignores, need_next
+            df, ts_col, vals, keys, ignores, need_next,
+            range_start, range_end, every_d,
         )
     else:
         staged = _interp_bucket_tracks(
-            df, ts_col, vals, keys, spine, ignores, need_next,
+            df, ts_col, vals, keys, ignores, need_next,
             lo_us, hi_us, every_d.microseconds,
         )
     t_us = F.unix_micros(F.col("_t"))
@@ -332,12 +304,16 @@ def _sample_pairs(vals, ignores) -> "list[Column]":
     return pairs
 
 
+def _null_like(df: DataFrame, src: str, name: str) -> Column:
+    """A NULL of ``df[src]``'s type, named ``name``."""
+    return F.lit(None).cast(df.schema[src].dataType.simpleString()).alias(name)
+
+
 def _interp_bucket_tracks(
     df: DataFrame,
     ts_col: str,
     vals,
     keys: list[str],
-    spine: DataFrame,
     ignores,
     need_next: bool,
     lo_us: int,
@@ -352,7 +328,15 @@ def _interp_bucket_tracks(
     Buckets past the last instant clamp to K+1 — the min over them is
     still the earliest sample after t_K; buckets before the first
     instant clamp to 0 (their members are all ≤ t_0, exactly instant
-    0's prev-candidates). Returns spine rows with _p{i}/_n{i}.
+    0's prev-candidates).
+
+    The window passes run over the bucket rows only. A bucket row owns
+    instants ``[k, min(next bucket − 1, K)]``: no sample falls between,
+    so they share its prev (the forward tracker) and its next (the
+    strictly later buckets). A group's first row also owns ``[0, k −
+    1]``: nothing is at or before those, and their next is the first
+    usable sample from bucket k on. Returns one row per instant with
+    _t and _p{i}/_n{i}.
     """
     nv = len(vals)
     kmax = (hi_us - lo_us) // w_us  # index of the last instant
@@ -384,47 +368,22 @@ def _interp_bucket_tracks(
                 for i in range(nv)
             ],
         )
-        .select(
-            *keys,
-            "_k",
-            F.lit(0).alias("_side"),
-            F.lit(None).cast("timestamp").alias("_t"),
-            *[F.col(f"_bp{i}") for i in range(nv)],
-            *[F.col(f"_bn{i}") for i in range(nv)],
-        )
     )
 
-    spine_k = spine.select(
-        *keys,
-        ((F.unix_micros(F.col("_t")) - F.lit(lo_us)) / F.lit(w_us))
-        .cast("long")
-        .alias("_k"),
-        F.col("_side"),
-        F.col("_t"),
-        *[F.lit(None).cast(bucketed.schema[f"_bp{i}"].dataType.simpleString()).alias(f"_bp{i}") for i in range(nv)],
-        *[F.lit(None).cast(bucketed.schema[f"_bn{i}"].dataType.simpleString()).alias(f"_bn{i}") for i in range(nv)],
-    )
-    u = bucketed.unionByName(spine_k)
-
-    # forward pass: bucket rows sort before their instant (side 0 < 1),
-    # so instant k's frame ends with bucket k's prev-candidate
-    fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("_k").asc(), F.col("_side").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    asc = Window.partitionBy(*keys).orderBy(F.col("_k").asc())
+    # forward pass: a bucket's frame ends with its own prev-candidate
+    fwd = asc.rowsBetween(Window.unboundedPreceding, 0)
     track = [
         F.last(F.col(f"_bp{i}"), ignorenulls=True).over(fwd).alias(f"_p{i}")
         for i in range(nv)
     ]
     if need_next:
-        # next tracker: strictly-later buckets only — in reverse order
-        # (k desc, side desc) the strictly-preceding frame at instant k
-        # holds buckets ≥ k+1 (bucket k's own row sorts AFTER its
-        # instant there), i.e. exactly the samples with ts > t_k
+        # next tracker: in reverse order the strictly-preceding frame
+        # of bucket k holds buckets ≥ k+1, i.e. exactly the samples
+        # with ts > t_k
         rev = (
             Window.partitionBy(*keys)
-            .orderBy(F.col("_k").desc(), F.col("_side").desc())
+            .orderBy(F.col("_k").desc())
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         track += [
@@ -432,13 +391,38 @@ def _interp_bucket_tracks(
             for i in range(nv)
         ]
     else:
-        track += [
-            F.lit(None)
-            .cast(bucketed.schema[f"_bn{i}"].dataType.simpleString())
+        track += [_null_like(bucketed, f"_bn{i}", f"_n{i}") for i in range(nv)]
+    first = F.lag("_k").over(asc).isNull()
+    tracked = bucketed.select(
+        "*",
+        *track,
+        F.when(first, F.lit(0).cast("long")).otherwise(F.col("_k")).alias("_jlo"),
+        # least() skips the last row's NULL lead
+        F.least(F.lead("_k").over(asc) - 1, F.lit(kmax)).alias("_jhi"),
+    )
+    # a row whose range is empty (the clamped bucket K+1 behind an
+    # earlier one) explodes NULL → no instant
+    owned = tracked.select(
+        "*",
+        F.explode(
+            F.when(
+                F.col("_jhi") >= F.col("_jlo"),
+                F.sequence(F.col("_jlo"), F.col("_jhi")),
+            )
+        ).alias("_j"),
+    )
+    head = F.col("_j") < F.col("_k")
+    return owned.select(
+        *keys,
+        F.timestamp_micros(F.lit(lo_us) + F.col("_j") * F.lit(w_us)).alias("_t"),
+        *[F.when(~head, F.col(f"_p{i}")).alias(f"_p{i}") for i in range(nv)],
+        *[
+            F.when(head, F.coalesce(F.col(f"_bn{i}"), F.col(f"_n{i}")))
+            .otherwise(F.col(f"_n{i}"))
             .alias(f"_n{i}")
             for i in range(nv)
-        ]
-    return u.select("*", *track).where(F.col("_side") == 1)
+        ],
+    )
 
 
 def _interp_union_tracks(
@@ -446,16 +430,21 @@ def _interp_union_tracks(
     ts_col: str,
     vals,
     keys: list[str],
-    spine: DataFrame,
     ignores,
     need_next: bool,
+    range_start,
+    range_end,
+    every_d: Duration,
 ) -> DataFrame:
     """Raw-sample union kernel (calendar EVERY / non-literal bounds):
     union instants (side=1) with samples (side=0) and run the two O(n)
     ordered passes over one hash partitioning. Samples sort before
     instants at equal ts ascending, so an exact-ts sample is seen by
     the preceding frame (→ _isfilled = false) and not the
-    next-tracker."""
+    next-tracker. The instants come from a spine of every group ×
+    every ``sequence(t1, t2, every)`` instant, the groups from a
+    distinct over ``df``'s keys — with no keys, one row if ``df`` has
+    any."""
     nv = len(vals)
     samples = df.select(
         *keys,
@@ -467,13 +456,23 @@ def _interp_union_tracks(
     samples = samples.select(
         *keys, "_t", "_side", *_sample_pairs(vals, ignores)
     )
-    spine_nulls = spine
-    for i in range(nv):
-        spine_nulls = spine_nulls.withColumn(
-            f"_w{i}",
-            F.lit(None).cast(samples.schema[f"_w{i}"].dataType.simpleString()),
-        )
-    u = samples.unionByName(spine_nulls)
+    if keys:
+        groups = df.select(*keys).distinct()
+    else:
+        groups = df.select(F.lit(1).alias("_g")).limit(1)
+    spine = groups.select(
+        *keys,
+        F.explode(
+            F.sequence(
+                F.lit(range_start).cast("timestamp"),
+                F.lit(range_end).cast("timestamp"),
+                F.expr(f"interval {every_d.interval_string()}"),
+            )
+        ).alias("_t"),
+        F.lit(1).alias("_side"),
+        *[_null_like(samples, f"_w{i}", f"_w{i}") for i in range(nv)],
+    )
+    u = samples.unionByName(spine)
 
     asc = Window.partitionBy(*keys).orderBy(
         F.col("_t").asc(), F.col("_side").asc()
@@ -502,10 +501,5 @@ def _interp_union_tracks(
             for i in range(nv)
         ]
     else:
-        track += [
-            F.lit(None)
-            .cast(samples.schema[f"_w{i}"].dataType.simpleString())
-            .alias(f"_n{i}")
-            for i in range(nv)
-        ]
+        track += [_null_like(samples, f"_w{i}", f"_n{i}") for i in range(nv)]
     return u.select("*", *track).where(F.col("_side") == 1)

@@ -963,10 +963,8 @@ def q_interp_none(spark, sf_dir):
     """interp ... FILL(none) — the reference DEFAULT when FILL is omitted
     (FILL_MODE_NONE, parTranslater.c:14626): only instants coinciding
     with a sample, no interpolation. Runs over a day-bucketed series so
-    exact hits exist. The spine comes from the cached catalog tag
-    domain — NONE mode emits only exact hits, so a superset of keys
-    cannot add rows, and the (aggregated) source is not re-scanned."""
-    from tdengine_spark.catalog import tag_domain
+    exact hits exist. The groups come from the daily series' own
+    bucket rows, so the (aggregated) source is not re-scanned."""
     from tdengine_spark.operators.interp import interp
 
     ev = t(spark, sf_dir, "events")
@@ -978,9 +976,6 @@ def q_interp_none(spark, sf_dir):
     out = interp(
         daily, "dts", "v", "2024-01-05", "2024-01-25", "1d",
         mode="none", partition_by=["event_type"], out_col="value",
-        group_values=tag_domain(
-            spark, f"{sf_dir}/events.parquet", ["event_type"]
-        ),
         ordered=False,
     )
     return out.select("event_type", "_irowts", "value", "_isfilled")

@@ -410,17 +410,12 @@ from tdengine_spark.operators.interp import interp  # noqa: E402
 def q_interp_linear(spark, sf_dir):
     """interp ... RANGE('2024-01-05','2024-01-25') EVERY(1d) FILL(LINEAR).
 
-    The key spine comes from the catalog tag domain (session-cached
-    collect of the tiny distinct key set), so the fact table is scanned
-    exactly once per plan — LINEAR drops instants for sample-less
-    groups, so a cached/superset domain cannot add rows."""
-    from tdengine_spark.catalog import tag_domain
-
+    Each user's instants are filled from that user's own bucket rows,
+    so the fact table is scanned exactly once per plan."""
     ev = t(spark, sf_dir, "events")
     out = interp(
         ev, "ts", "value", "2024-01-05", "2024-01-25", "1d",
         mode="linear", partition_by=["user_id"],
-        group_values=tag_domain(spark, f"{sf_dir}/events.parquet", ["user_id"]),
         ordered=False,
     )
     return out.select(
@@ -450,17 +445,12 @@ def q_interp_linear(spark, sf_dir):
 def q_interp_prev(spark, sf_dir):
     """interp ... EVERY(6h) FILL(PREV) partitioned by tag.
 
-    Key spine from the cached catalog tag domain (single fact scan);
-    PREV emits nothing for sample-less groups, so superset-safe."""
-    from tdengine_spark.catalog import tag_domain
-
+    The groups come from the bucket rows themselves (single fact
+    scan)."""
     ev = t(spark, sf_dir, "events")
     out = interp(
         ev, "ts", "value", "2024-01-10", "2024-01-12", "6h",
         mode="prev", partition_by=["event_type"],
-        group_values=tag_domain(
-            spark, f"{sf_dir}/events.parquet", ["event_type"]
-        ),
         ordered=False,
     )
     return out.select(

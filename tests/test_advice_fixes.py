@@ -181,9 +181,9 @@ def test_duration_promotion_not_on_counts():
     assert "make_dt_interval" in _rewrite_ops("click_ts + 500")
 
 
-def test_interp_reversed_range_with_group_values(spark):
-    """RANGE(t1,t2) with t1 > t2 is empty even when group_values is
-    passed explicitly (r7 ADVICE low)."""
+def test_interp_reversed_range_is_empty(spark):
+    """RANGE(t1,t2) with t1 > t2 is empty even when the source has a
+    group with samples (r7 ADVICE low)."""
     from tdengine_spark.operators.interp import interp
 
     df = spark.createDataFrame(
@@ -191,7 +191,7 @@ def test_interp_reversed_range_with_group_values(spark):
     ).select("k", F.col("ts").cast("timestamp").alias("ts"), "v")
     out = interp(
         df, "ts", "v", "2024-01-02 00:00:00", "2024-01-01 00:00:00", "1h",
-        mode="prev", partition_by=["k"], group_values=["a"],
+        mode="prev", partition_by=["k"],
     )
     assert out.count() == 0
 

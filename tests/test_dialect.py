@@ -813,3 +813,73 @@ def test_ansi_scoped_to_dialect(spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     with _pt.raises(PySparkException):
         spark.range(1).selectExpr("cast('oops' as int) as x").collect()
+
+
+_METERS_INTERP = (
+    "SELECT _irowts, location, interp(current) AS c FROM meters "
+    "PARTITION BY location "
+    "RANGE('2024-01-01 00:00:00', '2024-01-01 00:02:00') EVERY(1m) FILL(LINEAR)"
+)
+
+
+def _meters_child(spark, db, child, tags, values):
+    from tdengine_spark.dialect import execute
+
+    execute(
+        spark, db,
+        f"INSERT INTO {child} USING meters TAGS {tags} "
+        f"VALUES ('2024-01-01 00:00:00', {values[0]}, 220)"
+        f"('2024-01-01 00:02:00', {values[1]}, 221)",
+    )
+
+
+def _meters_location(spark, tmp_path):
+    from tdengine_spark.dialect import execute
+
+    db = Database(root=str(tmp_path))
+    execute(
+        spark, db,
+        "CREATE STABLE meters (ts TIMESTAMP, current FLOAT, voltage INT) "
+        "TAGS (group_id INT, location BINARY(16))",
+    )
+    _meters_child(spark, db, "d1", "(1, 'sf')", (1.0, 3.0))
+    return db
+
+
+def test_interp_after_insert_sees_new_child(spark, tmp_path):
+    """An interp run after an INSERT into a new child resamples that
+    child too: the groups follow from the table's rows, not from a
+    key list remembered from an earlier query."""
+    from tdengine_spark.dialect import execute
+
+    db = _meters_location(spark, tmp_path)
+    assert execute(spark, db, _METERS_INTERP).count() == 3
+    _meters_child(spark, db, "d2", "(2, 'la')", (10.0, 30.0))
+    got = sorted(
+        (r.location, r._irowts.minute, round(r.c, 4))
+        for r in execute(spark, db, _METERS_INTERP).collect()
+    )
+    assert got == [
+        ("la", 0, 10.0), ("la", 1, 20.0), ("la", 2, 30.0),
+        ("sf", 0, 1.0), ("sf", 1, 2.0), ("sf", 2, 3.0),
+    ]
+
+
+def test_interp_plan_build_starts_no_extra_job(spark, tmp_path):
+    """Building an interp statement's DataFrame starts no more Spark
+    jobs than building a plain read of the same table: nothing is
+    collected while the plan is only being built."""
+    db = _meters_location(spark, tmp_path)
+    sc = spark.sparkContext
+
+    def jobs_to_build(sql, group):
+        sc.setJobGroup(group, group)
+        try:
+            translate(spark, db, sql)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    interp_jobs = jobs_to_build(_METERS_INTERP, "build_interp")
+    read_jobs = jobs_to_build("SELECT * FROM meters", "build_read")
+    assert interp_jobs <= read_jobs, (interp_jobs, read_jobs)

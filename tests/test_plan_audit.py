@@ -36,14 +36,28 @@ AUDITED = [
     "interp_prev_6h",
 ]
 
+#: dialect statements audited alongside the registry queries
+DIALECT = {
+    "dialect_interp_near": (
+        "SELECT _irowts, event_type, interp(value) FROM events "
+        "PARTITION BY event_type "
+        "RANGE('2024-01-10 00:00:00', '2024-01-12 00:00:00') EVERY(6h) FILL(NEAR)"
+    ),
+}
 
-@pytest.mark.parametrize("name", AUDITED)
+
+@pytest.mark.parametrize("name", AUDITED + list(DIALECT))
 def test_plan_shape(spark, name):
     import tdengine_spark.queries_extra  # noqa: F401
     import tdengine_spark.queries_pipeline  # noqa: F401
+    from tdengine_spark.catalog import Database
+    from tdengine_spark.dialect import translate
     from tdengine_spark.queries import REGISTRY
 
-    df = REGISTRY[name].spark_fn(spark, SF)
+    if name in DIALECT:
+        df = translate(spark, Database(root=SF), DIALECT[name])
+    else:
+        df = REGISTRY[name].spark_fn(spark, SF)
     p = df._jdf.queryExecution().executedPlan().toString()
     exch = p.count("Exchange")
     if name != "cosine_topk_bruteforce":
@@ -67,9 +81,16 @@ def test_plan_shape(spark, name):
     if name == "window_join_5m":
         assert exch <= 3, f"window join shuffles {exch}x"
     if name in ("interp_linear_daily", "interp_prev_6h"):
-        # single-fact-scan contract: key spine from the catalog tag
-        # domain, not a second scan of events; ≤2 exchanges (window
-        # hash + output range sort)
+        # single-fact-scan contract: groups come from the bucket rows,
+        # not a second scan of events; ≤2 exchanges (bucket groupBy +
+        # window hash)
         scans = p.count("events.parquet")
         assert scans <= 1, f"{scans} scans of events"
         assert exch <= 2, f"interp shuffles {exch}x"
+    if name == "dialect_interp_near":
+        # FILL(NEAR) emits every instant of every group, and still must
+        # not scan events twice; the dialect keeps its output ordered,
+        # so its cap is the 2 above plus the output range sort
+        scans = p.count("events.parquet")
+        assert scans <= 1, f"{scans} scans of events"
+        assert exch <= 3, f"interp shuffles {exch}x"
