@@ -44,9 +44,3 @@ def timediff(a: "Column | str", b: "Column | str", unit: str = "a") -> Column:
     cb = F.col(b) if isinstance(b, str) else b
     unit_us = parse_duration(f"1{unit}").microseconds
     return ((F.unix_micros(ca) - F.unix_micros(cb)) / unit_us).cast("long")
-
-
-def json_get(col: "Column | str", key: str) -> Column:
-    """tag->'key' operator (OP_TYPE_JSON_GET_VALUE, tdef.h:210)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, f"$.{key}")

@@ -39,13 +39,18 @@ def spread(
     estimated size instead of using the cluster parallelism outright
     (guide §2 — partitioning derived from input size, not a constant).
     Used by the Python/Arrow-crossing pipelines, where each task pays a
-    fixed worker round-trip + Arrow (de)serialization cost (~5-10 ms):
-    slicing a small input cluster-wide makes that overhead dominate
-    (measured at sf0.1: simhash/minhash are ~15% faster on
-    size-derived ~5 partitions than on 32). On a large input the size
-    estimate exceeds cluster × bytes_per_task, so the target caps at
-    the cluster parallelism — production behavior is unchanged. Pure
-    JVM regex pipelines (the text gates) keep the plain
+    fixed worker round-trip + Arrow (de)serialization cost: slicing a
+    small input cluster-wide makes that overhead dominate (measured at
+    sf0.1: simhash/minhash are ~15% faster on size-derived ~5
+    partitions than on 32). That cost, from a trivial mapInArrow over
+    2,200 rows at 4 vs 64 tasks on a 4-core ``local[4]``: ~50-60 ms of
+    wall and ~180-220 ms of worker CPU per extra task while every task
+    re-read ``pyspark.zip``'s directory; ~14 ms and ~15-18 ms under the
+    worker daemon of ``session.get_spark`` (``tdengine_spark.pydaemon``).
+    ``bytes_per_task`` values were tuned at the higher cost. On a large
+    input the size estimate exceeds cluster × bytes_per_task, so the
+    target caps at the cluster parallelism — production behavior is
+    unchanged. Pure JVM regex pipelines (the text gates) keep the plain
     cluster-parallel target: their per-task cost is a codegen'd task
     launch (~1 ms), so finer slicing keeps winning there."""
     sc = df.sparkSession.sparkContext

@@ -6,6 +6,25 @@ the whole story: AQE for runtime re-planning (the analog of the reference's
 per-vgroup scale-out in planScaleOut.c), Arrow for the Python boundary
 (the analog of the udfd RPC boundary), UTC timestamps to match the
 reference's epoch-int64 storage.
+
+Sessions that ``get_spark`` starts itself (``local[N]``, no master chosen
+elsewhere) also drop two fixed costs that have nothing to do with the data:
+
+- Checkpoint files go through Spark's FileSystem-based checkpoint manager.
+  Without libhadoop, the default FileContext manager forks ``readlink``
+  twice per rename (``RawLocalFileSystem.getFileLinkStatus``) and ``chmod``
+  on each create, i.e. on every offset-log, commit-log and state file of
+  every micro-batch. The FileSystem manager renames with ``rename(2)``;
+  it still forks ``chmod`` on some creates (a 10-batch stream: 222 shell
+  children → 47). ``.crc`` files and the checkpoint checksums stay on.
+- Python workers fork from ``tdengine_spark.pydaemon``, which stops every
+  task from re-reading the directory of ``pyspark.zip`` (see that module).
+  The package's parent directory goes on the workers' ``PYTHONPATH`` so the
+  daemon, and any UDF that imports this package, resolves from any cwd.
+
+All of this stays off under an outside master (``$SPARK_MASTER``,
+``spark-submit --master``, a running context): there the executors may not
+have this package, and their file system need not be the local one.
 """
 
 from __future__ import annotations
@@ -17,6 +36,27 @@ from pyspark.sql import SparkSession
 
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 DEFAULT_SHUFFLE_PARTITIONS = int(_CPUS)
+
+#: the directory that holds the ``tdengine_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _local_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """The settings of a session this module starts itself (module
+    docstring); a caller's ``extra_conf`` wins, except that its worker
+    ``PYTHONPATH`` is merged after the package's parent directory."""
+    paths = [_PACKAGE_PARENT, extra_conf.get(_WORKER_PYTHONPATH)]
+    return {
+        "spark.master": f"local[{_CPUS}]",
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+        "spark.python.daemon.module": "tdengine_spark.pydaemon",
+        **extra_conf,
+        _WORKER_PYTHONPATH: os.pathsep.join(p for p in paths if p),
+    }
 
 
 def _master_is_set() -> bool:
@@ -53,6 +93,16 @@ def get_spark(
         on a real cluster set it ~2-3x total cores and let AQE coalesce.
       - Arrow enabled: every pandas_udf / applyInPandas crossing is
         Arrow-batched, never per-row pickled.
+
+    When no master was chosen elsewhere (``_master_is_set``), the session
+    runs at ``local[$SPARK_GRAFT_CPUS]`` and also sets
+    ``spark.sql.streaming.checkpointFileManagerClass`` to the FileSystem
+    manager (no ``readlink`` forks per checkpoint rename),
+    ``spark.python.daemon.module`` to ``tdengine_spark.pydaemon`` (no
+    per-task re-read of ``pyspark.zip``) and prepends the package's parent
+    directory to ``spark.executorEnv.PYTHONPATH`` (module docstring). A
+    caller's ``extra_conf`` wins for the first two. Under an outside master
+    none of the three is set.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -90,11 +140,11 @@ def get_spark(
     # shell that merely sourced spark-env.sh ($SPARK_ENV_LOADED) has not
     # chosen one, so it still gets local[cpus] (r14 verdict:
     # suspect_cpus_ignored).
+    conf = dict(extra_conf or {})
     if not _master_is_set():
-        builder = builder.master(f"local[{_CPUS}]")
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+        conf = _local_conf(conf)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

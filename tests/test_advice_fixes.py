@@ -618,11 +618,18 @@ def test_interp_epoch_us_strict_iso_gate():
 
 def test_get_spark_keeps_submitted_master(tmp_path):
     """``spark-submit --master local[2]`` wins over get_spark's
-    local[$SPARK_GRAFT_CPUS] default."""
+    local[$SPARK_GRAFT_CPUS] default, and the settings get_spark makes
+    only for the local sessions it starts (worker daemon, checkpoint
+    manager) stay unset."""
     script = tmp_path / "probe.py"
     script.write_text(
         "from tdengine_spark.session import get_spark\n"
-        "print('MASTER=' + get_spark('submit-probe').sparkContext.master)\n"
+        "spark = get_spark('submit-probe')\n"
+        "print('MASTER=' + spark.sparkContext.master)\n"
+        "print('DAEMON=' + str(spark.sparkContext.getConf()"
+        ".get('spark.python.daemon.module')))\n"
+        "print('CKPT=' + str(spark.conf.get("
+        "'spark.sql.streaming.checkpointFileManagerClass', None)))\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "SPARK_MASTER"}
@@ -633,4 +640,6 @@ def test_get_spark_keeps_submitted_master(tmp_path):
         [shutil.which("spark-submit"), "--master", "local[2]", str(script)],
         env=env, capture_output=True, text=True, timeout=300,
     )
-    assert "MASTER=local[2]" in out.stdout.splitlines(), out.stderr[-2000:]
+    lines = out.stdout.splitlines()
+    assert "MASTER=local[2]" in lines, out.stderr[-2000:]
+    assert "DAEMON=None" in lines and "CKPT=None" in lines, out.stdout

@@ -160,6 +160,24 @@ def test_count_window_trigger(spark, ordered_stream_dir):
     assert got == _replay_count_windows(_arrival_rows(d), 50)
 
 
+def _drain_count_windows(spark, d, files):
+    """Copy ``files`` of ``d/in`` into ``d/arrive`` and drain them through
+    a checkpointed count(5) trigger (``d/ckpt``) into the sink ``d/out``."""
+    arrive = f"{d}/arrive"
+    os.makedirs(arrive, exist_ok=True)
+    for i in files:
+        shutil.copy(f"{d}/in/data_{i}.parquet", arrive)
+        time.sleep(0.05)  # distinct mtimes → deterministic pickup order
+    schema = spark.read.parquet(f"{d}/in").schema
+    src = read_stream(spark, arrive, schema, max_files_per_trigger=1)
+    q = write_into(
+        count_window_trigger(src, "ts", 5, "user_id", "value"),
+        f"{d}/out", f"{d}/ckpt", trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None
+
+
 def test_count_window_restart_at_other_parallelism(
     spark, ordered_stream_dir, monkeypatch
 ):
@@ -169,29 +187,62 @@ def test_count_window_restart_at_other_parallelism(
     from pyspark import SparkContext
 
     d = ordered_stream_dir
-    arrive, out = f"{d}/arrive", f"{d}/out"
-    os.makedirs(arrive)
-    schema = spark.read.parquet(f"{d}/in").schema
-
-    def drain(files):
-        for i in files:
-            shutil.copy(f"{d}/in/data_{i}.parquet", arrive)
-            time.sleep(0.05)  # distinct mtimes → deterministic pickup order
-        src = read_stream(spark, arrive, schema, max_files_per_trigger=1)
-        q = write_into(
-            count_window_trigger(src, "ts", 5, "user_id", "value"),
-            out, f"{d}/ckpt", trigger={"availableNow": True},
-        )
-        q.awaitTermination(120)
-        assert not q.isActive and q.exception() is None
-
-    drain([0, 1])
+    _drain_count_windows(spark, d, [0, 1])
     monkeypatch.setattr(
         SparkContext, "defaultParallelism", property(lambda self: 3)
     )
-    drain([2, 3])
-    got = _count_rows(spark.read.parquet(out).collect())
+    _drain_count_windows(spark, d, [2, 3])
+    got = _count_rows(spark.read.parquet(f"{d}/out").collect())
     assert got == _replay_count_windows(_arrival_rows(d), 5)
+
+
+def test_count_window_restart_across_checkpoint_managers(
+    spark, ordered_stream_dir
+):
+    """A checkpoint written by Spark's default (FileContext) checkpoint
+    manager restarts under the session's FileSystem manager with every
+    key's open window kept."""
+    d = ordered_stream_dir
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    session_manager = spark.conf.get(key)
+    assert session_manager.endswith(".FileSystemBasedCheckpointFileManager")
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        _drain_count_windows(spark, d, [0, 1])
+    finally:
+        spark.conf.set(key, session_manager)
+    _drain_count_windows(spark, d, [2, 3])
+    got = _count_rows(spark.read.parquet(f"{d}/out").collect())
+    assert got == _replay_count_windows(_arrival_rows(d), 5)
+
+
+def test_with_notify_events_equal_closed_windows(spark, ordered_stream_dir):
+    """``with_notify``: a checkpointed foreachBatch whose transport
+    receives one WINDOW_CLOSE event per closed window."""
+    from tdengine_spark.streaming.notify import with_notify
+
+    d = ordered_stream_dir
+    schema = spark.read.parquet(f"{d}/in").schema
+    src = read_stream(spark, f"{d}/in", schema, max_files_per_trigger=1)
+    events = []
+    q = with_notify(
+        count_window_trigger(src, "ts", 50, "user_id", "value"),
+        f"{d}/ckpt_notify", events.extend, trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None
+    assert {e["event"] for e in events} == {"WINDOW_CLOSE"}
+    assert {e["batch_id"] for e in events} <= set(range(4))
+    got = sorted(
+        (e["k"], pd.Timestamp(e["_wstart"]), pd.Timestamp(e["_wend"]),
+         e["n_rows"], e["sum_value"])
+        for e in events
+    )
+    assert got == _replay_count_windows(_arrival_rows(d), 50)
 
 
 def test_latest_table(spark, stream_dir):
