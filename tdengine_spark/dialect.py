@@ -32,6 +32,7 @@ Aggregate-name rewrites applied in the select list:
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -268,30 +269,22 @@ def _wrap_ts_mul_div(expr: str) -> str:
     reference's numeric promotion demotes TIMESTAMP to epoch for * / %
     (test_join_ns_db: ``timetruncate(ts,1a)/1000000`` in an ns db)."""
     factor = _EPOCH_FACTOR.get(_DB_PRECISION, " div 1000")
-    pat = re.compile(r"(?i)\btimetruncate\s*\(")
-    i = 0
-    while True:
-        m = pat.search(expr, i)
-        if not m:
-            return expr
-        lo = expr.index("(", m.start())
-        depth, j = 1, lo + 1
-        while j < len(expr) and depth:
-            if expr[j] == "(":
-                depth += 1
-            elif expr[j] == ")":
-                depth -= 1
-            j += 1
-        k = j
-        while k < len(expr) and expr[k] == " ":
-            k += 1
-        if k < len(expr) and expr[k] in "*/%":
-            call = expr[m.start():j]
-            repl = f"(unix_micros({call}){factor})"
-            expr = expr[:m.start()] + repl + expr[j:]
-            i = m.start() + len(repl)
-        else:
-            i = j
+    out, i = [], 0
+    for m, _ in _scan(expr, r"(?i:\btimetruncate(?=\s*\())"):
+        if m.start() < i:  # nested in the call just taken
+            continue
+        j = _close_paren(expr, expr.index("(", m.end()))
+        if j < 0:
+            j = len(expr)
+        call = expr[m.start():j]
+        out.append(expr[i:m.start()])
+        out.append(
+            f"(unix_micros({call}){factor})" if re.match(r" *[*/%]", expr[j:])
+            else call
+        )
+        i = j
+    out.append(expr[i:])
+    return "".join(out)
 
 
 def _rewrite_ops(expr: str) -> str:
@@ -731,7 +724,78 @@ def _rewrite_epoch_ts_literals(expr: str) -> str:
     return in_re.sub(in_sub, expr)
 
 
-_QUOTED_RE = re.compile(r"'[^']*'|\"[^\"]*\"")
+# the dialect's two string-literal openings: '…' and "…"
+_SQ, _DQ = r"'[^']*", r'"[^"]*'
+_QUOTED_RE = re.compile(f"{_SQ}'|{_DQ}\"")
+# the lexical rule every depth-0 scan shares: literals and `…`
+# identifiers are opaque (an unterminated one runs to the end), parens
+# count depth. Each branch starts with its literal and an empty group
+# after it names the kind, so the regex engine can skip to the next
+# candidate character.
+_LEX = rf"""{_SQ}'?|{_DQ}"?|`[^`]*`?|\((?P<open>)|\)(?P<close>)"""
+
+
+@functools.lru_cache(maxsize=None)
+def _scanner(pat) -> "re.Pattern":
+    if pat is None:
+        return re.compile(_LEX)
+    if isinstance(pat, re.Pattern):
+        return re.compile(f"{_LEX}|(?:{pat.pattern})(?P<hit>)", pat.flags)
+    return re.compile(f"{_LEX}|(?:{pat})(?P<hit>)")
+
+
+def _scan(text: str, pat=None, start: int = 0):
+    """Yield ``(match, depth)`` for each match of ``pat`` in ``text``
+    outside quotes, ``depth`` being the paren depth at the match (0 at
+    ``start``; parens inside a match count after it).
+
+    The lexical rule: ``'…'`` and ``"…"`` literals and backtick-quoted
+    identifiers are opaque, an unterminated one running to the end of
+    the text, and ``(``/``)`` count depth; a stray ``)`` takes depth
+    below 0. ``pat``
+    is a regex string (flags scoped, ``(?i:…)``) or a compiled pattern,
+    whose flags then apply to the whole scan. With ``pat`` None it
+    yields each paren with the depth outside it, so a ``(`` and its
+    ``)`` report the same depth.
+
+    ``_outside_quotes`` keeps its own rule: it leaves backtick spans and
+    unterminated quotes to its callback, which strips backticks."""
+    depth = 0
+    for m in _scanner(pat).finditer(text, start):
+        kind = m.lastgroup
+        if kind == "hit":
+            yield m, depth
+            if m.end() - m.start() > 1:  # a one-character hit is no paren
+                h = m.group()
+                depth += h.count("(") - h.count(")")
+        elif kind == "open":
+            if pat is None:
+                yield m, depth
+            depth += 1
+        elif kind == "close":
+            depth -= 1
+            if pat is None:
+                yield m, depth
+
+
+def _close_paren(text: str, lo: int) -> int:
+    """End of the ``)`` matching the ``(`` at ``lo``, or -1."""
+    for m, depth in _scan(text, None, lo):
+        if depth == 0 and m.lastgroup == "close":
+            return m.end()
+    return -1
+
+
+def _split_depth0(text: str, sep=",") -> "list[str]":
+    """``text`` cut at each depth-0 match of ``sep`` outside quotes
+    (parts unstripped, the separators dropped)."""
+    parts, lo = [], 0
+    for m, depth in _scan(text, sep):
+        if depth == 0:
+            parts.append(text[lo:m.start()])
+            lo = m.end()
+    parts.append(text[lo:])
+    return parts
 
 
 def _outside_quotes(expr: str, fn) -> str:
@@ -777,39 +841,22 @@ def _rewrite_call(s: str, name: str, render) -> str:
     """Replace each ``name(args…)`` call in ``s`` with ``render(args)``.
 
     Balanced-paren aware (``spread(round(v, 2))`` captures the whole
-    nested call) and skips occurrences inside single-quoted literals —
-    the failure modes of the naive ``[^)]+?`` regexes this replaces.
+    nested call) and skips occurrences inside literals and backticked
+    aliases — the failure modes of the naive ``[^)]+?`` regexes this
+    replaces.
     """
-    pat = re.compile(r"\b" + name + r"\s*\(", re.IGNORECASE)
     out, i = [], 0
-    while True:
-        m = pat.search(s, i)
-        if not m:
-            out.append(s[i:])
-            break
-        if (s.count("'", 0, m.start()) % 2 == 1  # inside a string literal
-                or s.count("`", 0, m.start()) % 2 == 1):  # inside an alias
-            out.append(s[i : m.end()])
-            i = m.end()
+    for m, _ in _scan(s, rf"(?i:\b{name}(?=\s*\())"):
+        if m.start() < i:  # nested in the call just rendered
             continue
-        depth, j, in_str = 1, m.end(), False
-        while j < len(s) and depth:
-            ch = s[j]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-            j += 1
-        if depth:  # unbalanced — leave the tail untouched
-            out.append(s[i:])
+        lo = s.index("(", m.end())
+        j = _close_paren(s, lo)
+        if j < 0:  # unbalanced — leave the tail untouched
             break
-        args = [a.strip() for a in _split_select(s[m.end() : j - 1])]
         out.append(s[i : m.start()])
-        out.append(render(args))
+        out.append(render(_split_select(s[lo + 1 : j - 1])))
         i = j
+    out.append(s[i:])
     return "".join(out)
 
 
@@ -997,24 +1044,13 @@ def _rewrite_aggs(select: str, ts_col: str, pk_col: "str | None" = None,
         _mfl = re.match(
             r"(?is)^\s*(first|last|last_row)\s*\(\s*([^*]+?)\s*\)\s*$", _it
         )
-
-        def _balanced(txt: str) -> bool:
-            # the captured body must be the CALL's own argument list —
-            # `last(ts) + make_dt_interval(0, 0.001)` lazily matches
-            # with body `ts) + make_dt_interval(0, 0.001` (equal paren
-            # COUNTS, negative depth): reject anything whose depth dips
-            # below zero
-            d = 0
-            for ch in txt:
-                if ch == "(":
-                    d += 1
-                elif ch == ")":
-                    d -= 1
-                    if d < 0:
-                        return False
-            return d == 0
-
-        if _mfl and "`" not in _it and _balanced(_mfl.group(2)):
+        # the captured body must be the CALL's own argument list —
+        # `last(ts) + make_dt_interval(0, 0.001)` lazily matches with
+        # body `ts) + make_dt_interval(0, 0.001` (equal paren COUNTS,
+        # negative depth): wrapped in parens, it must close at its end
+        if _mfl and "`" not in _it and _close_paren(
+            f"({_mfl.group(2)})", 0
+        ) == len(_mfl.group(2)) + 2:
             _fn0 = _mfl.group(1).lower()
             _fl_fixed.append(", ".join(
                 f"{_fn0}({x}) as `{_fn0}({x})`"[:200]
@@ -1275,8 +1311,11 @@ def _table_names(sql: str) -> list[str]:
     return out
 
 
-_WIN_KEYWORDS = ("interval", "session", "state_window", "count_window",
-                 "event_window", "anomaly_window")
+_WIN_KEYWORD_RE = re.compile(
+    r"\b(?:interval|session|state_window|count_window|event_window"
+    r"|anomaly_window)(?=[\s(])",
+    re.IGNORECASE,
+)
 
 
 def _split_join_window_tail(sql: str):
@@ -1290,29 +1329,11 @@ def _split_join_window_tail(sql: str):
     hm = re.match(r"(?is)^\s*select\s+(.*?)\s+from\s+(.*)$", sql)
     if not fm or not hm:
         return None
-    low = sql.lower()
-    depth, i, in_q = 0, fm.end(), False
-    pos = None
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and (i == 0 or not (sql[i - 1].isalnum()
-                                                or sql[i - 1] == "_")):
-                for k in _WIN_KEYWORDS:
-                    if low.startswith(k, i) and re.match(
-                        r"[\s(]", low[i + len(k):i + len(k) + 1] or ""
-                    ):
-                        pos = i
-                        break
-                if pos is not None:
-                    break
-        i += 1
+    pos = next(
+        (m.start() for m, depth in _scan(sql, _WIN_KEYWORD_RE, fm.end())
+         if depth == 0),
+        None,
+    )
     if pos is None:
         return None
     head_rest = sql[hm.start(2):pos].strip()
@@ -1808,34 +1829,17 @@ def _split_top_and(expr: str) -> "list[str]":
     """Split a predicate on depth-0 ANDs outside string literals.
     The AND inside ``x BETWEEN a AND b`` joins BETWEEN's two bounds,
     not two conjuncts — it must stay inside one part."""
-    parts, depth, in_str, cur = [], 0, False, []
+    parts, lo = [], 0
     between = 0  # pending BETWEEN…AND pairs at any depth
-    toks = re.split(r"(?i)(\bAND\b|\bBETWEEN\b)", expr)
-    for t in toks:
-        tu = t.upper()
-        if tu == "BETWEEN" and not in_str:
+    for m, depth in _scan(expr, r"(?i:\b(?:AND|BETWEEN)\b)"):
+        if m.group().upper() == "BETWEEN":
             between += 1
-            cur.append(t)
-            continue
-        if tu == "AND" and not in_str:
-            if between:
-                between -= 1
-                cur.append(t)
-                continue
-            if depth == 0:
-                parts.append("".join(cur))
-                cur = []
-                continue
-        for ch in t:
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-        cur.append(t)
-    parts.append("".join(cur))
+        elif between:
+            between -= 1
+        elif depth == 0:
+            parts.append(expr[lo:m.start()])
+            lo = m.end()
+    parts.append(expr[lo:])
     return [p.strip() for p in parts if p.strip()]
 
 
@@ -1854,17 +1858,8 @@ def _pinned_tbnames(where: "str | None") -> "list[str] | None":
     extraction unsound — bail out (merge stays conservative)."""
     if not where or not re.search(r"(?i)\btbname\b", where):
         return None
-    depth, in_str = 0, False
-    for mm in re.finditer(r"(?i)\bOR\b|['()]", where):
-        t = mm.group(0)
-        if t == "'":
-            in_str = not in_str
-        elif not in_str and t == "(":
-            depth += 1
-        elif not in_str and t == ")":
-            depth -= 1
-        elif not in_str and depth == 0:
-            return None  # depth-0 OR
+    if len(_split_top_or(where)) > 1:
+        return None  # depth-0 OR
     names: "list[str] | None" = None
     for conj in _split_top_and(where):
         m = _TBNAME_EQ_RE.match(conj)
@@ -1875,7 +1870,7 @@ def _pinned_tbnames(where: "str | None") -> "list[str] | None":
             continue
         m = _TBNAME_IN_RE.match(conj)
         if m:
-            items = [v.strip() for v in m.group(1).split(",")]
+            items = [v.strip() for v in _split_depth0(m.group(1))]
             if items and all(
                 len(v) >= 2 and v[0] == "'" and v[-1] == "'" for v in items
             ):
@@ -2007,23 +2002,7 @@ def _has_clause_tail(text: str) -> bool:
     """True when ``text`` holds a depth-0, unquoted window/grouping
     clause keyword — i.e. _SELECTION_STMT_RE's lazy WHERE capture
     swallowed a clause that the _CLAUSE_RE path must handle."""
-    depth, i, n = 0, 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            i += 1
-            while i < n and text[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _CLAUSE_TAIL_RE.match(text, i)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                return True
-        i += 1
-    return False
+    return any(depth == 0 for _, depth in _scan(text, _CLAUSE_TAIL_RE))
 
 
 def _match_selection_stmt(sql: str):
@@ -2261,15 +2240,10 @@ def _take_operand(text: str):
     optional [AS] alias. Returns (operand_text, alias, rest)."""
     text = text.lstrip()
     if text.startswith("("):
-        depth = 0
-        for i, ch in enumerate(text):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        op, rest = text[: i + 1], text[i + 1 :]
+        j = _close_paren(text, 0)
+        if j < 0:
+            j = len(text)
+        op, rest = text[:j], text[j:]
     else:
         m = re.match(r"[A-Za-z_][\w.]*", text)
         op, rest = m.group(0), text[m.end() :]
@@ -2432,15 +2406,8 @@ def _translate_external_window(
     hm = _EXTWIN_HEAD_RE.match(sql[: em.start()])
     if not hm:
         raise ValueError(f"unsupported external_window head: {sql!r}")
-    # balanced scan over EXTERNAL_WINDOW( ... )
-    depth, i = 1, em.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = _close_paren(sql, em.end() - 1)
+    if i < 0:
         raise ValueError("unbalanced EXTERNAL_WINDOW clause")
     inner = sql[em.end() : i - 1]
     sub_text, walias, rest = _take_operand(inner)
@@ -2794,26 +2761,19 @@ def _subst_agg_refs(hv: str, agg_items) -> str:
         return re.sub(r"\s+", "", s).lower()
 
     wanted = {norm(e): n for e, n in agg_items}
-    out, i, n_ = [], 0, len(hv)
-    while i < n_:
-        m = re.match(r"[A-Za-z_]\w*\s*\(", hv[i:])
-        if m and (i == 0 or not (hv[i - 1].isalnum() or hv[i - 1] == "_")):
-            # capture the balanced-paren call span
-            j, depth = i + m.end(), 1
-            while j < n_ and depth:
-                if hv[j] == "(":
-                    depth += 1
-                elif hv[j] == ")":
-                    depth -= 1
-                j += 1
-            span = hv[i:j]
-            col = wanted.get(norm(span))
-            if col is not None:
-                out.append(f"`{col}`")
-                i = j
-                continue
-        out.append(hv[i])
-        i += 1
+    out, i = [], 0
+    for m, _ in _scan(hv, r"\b[A-Za-z_]\w*(?=\s*\()"):
+        if m.start() < i:  # inside a call already substituted
+            continue
+        j = _close_paren(hv, hv.index("(", m.end()))
+        if j < 0:
+            j = len(hv)
+        col = wanted.get(norm(hv[m.start():j]))
+        if col is not None:
+            out.append(hv[i:m.start()])
+            out.append(f"`{col}`")
+            i = j
+    out.append(hv[i:])
     return "".join(out)
 
 
@@ -2973,10 +2933,6 @@ def _dealias_interp_order(order: str, items) -> str:
     return re.sub(r"[A-Za-z_]\w*", sub, order)
 
 
-def _split_conjuncts(cond: str) -> list[str]:
-    return [c.strip() for c in re.split(r"\s+AND\s+", cond, flags=re.IGNORECASE)]
-
-
 _CMP_RE = re.compile(
     r"^([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*(>=|<=|=|>|<)\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)$"
 )
@@ -2991,7 +2947,7 @@ def _join_cond_parse(cond: str, lal: str, ral: str, ts_col: str):
     tag/tbname equality, sql.y primary-key join constraint)."""
     flip = {">": "<", "<": ">", ">=": "<=", "<=": ">=", "=": "="}
     keys, ts_op = [], None
-    for c in _split_conjuncts(cond):
+    for c in _split_top_and(cond):
         mm = _CMP_RE.match(c)
         if not mm:
             raise ValueError(f"unsupported join conjunct: {c!r}")
@@ -3026,31 +2982,27 @@ def _extract_indef_calls(items: "list[str]"):
     a window column first (``abs(diff(x, 0))`` → ``abs(_indef_0)``)."""
     calls: list[tuple[str, str]] = []
     out_items = []
-    pat = re.compile(r"(?i)\b(" + "|".join(_INDEF_FNS) + r")\s*\(")
+    pat = r"(?i:\b(?:" + "|".join(_INDEF_FNS) + r")(?=\s*\())"
     for it in items:
-        i = 0
-        while True:
-            m2 = pat.search(it, i)
-            if not m2:
-                break
-            lo = it.index("(", m2.start())
-            depth, j = 1, lo + 1
-            while j < len(it) and depth:
-                if it[j] == "(":
-                    depth += 1
-                elif it[j] == ")":
-                    depth -= 1
-                j += 1
+        out, i = [], 0
+        for m2, _ in _scan(it, pat):
+            if m2.start() < i:  # nested in the call just taken
+                continue
+            j = _close_paren(it, it.index("(", m2.end()))
+            if j < 0:
+                j = len(it)
+            out.append(it[i:m2.start()])
             if re.match(r"(?is)\s*over\b", it[j:]):
                 # explicit OVER clause (std window SQL `lag(v) over
                 # (…)`) — not a dialect indef call, leave untouched
-                i = j
-                continue
-            name = f"_indef_{len(calls)}"
-            calls.append((name, it[m2.start():j]))
-            it = it[:m2.start()] + name + it[j:]
-            i = m2.start() + len(name)
-        out_items.append(it)
+                out.append(it[m2.start():j])
+            else:
+                name = f"_indef_{len(calls)}"
+                calls.append((name, it[m2.start():j]))
+                out.append(name)
+            i = j
+        out.append(it[i:])
+        out_items.append("".join(out))
     return out_items, calls
 
 
@@ -3195,19 +3147,9 @@ def _negate_offset(spec: str) -> str:
 
 def _strip_outer_parens(s: str) -> str:
     s = s.strip().rstrip(";").strip()
-    while s.startswith("("):
-        depth = 0
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        if i == len(s) - 1:
-            s = s[1:-1].strip()
-        else:
-            break
+    # an unbalanced "(…" loses its first and last character too
+    while s.startswith("(") and _close_paren(s, 0) in (-1, len(s)):
+        s = s[1:-1].strip()
     return s
 
 
@@ -3227,23 +3169,9 @@ def _split_trailing_clauses(seg: str):
     """Strip depth-0 trailing ``ORDER BY … [SLIMIT n] [LIMIT n]`` from a
     union operand. Returns (core, {"order":…, "slimit":…, "limit":…}) —
     the dict empty when no depth-0 trailing clause exists."""
-    depth, i, cut = 0, 0, None
-    while i < len(seg):
-        ch = seg[i]
-        if ch == "'":
-            j = seg.find("'", i + 1)
-            i = len(seg) if j < 0 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _TRAIL_RE.match(seg, i)
-            if m:
-                cut = i
-                break
-        i += 1
+    cut = next(
+        (m.start() for m, depth in _scan(seg, _TRAIL_RE) if depth == 0), None
+    )
     if cut is None:
         return seg, {}
     m = _TRAIL_PARSE_RE.match(seg[cut:].strip())
@@ -3262,25 +3190,11 @@ def _split_top_union(sql: str):
     depth-0 trailing ORDER BY/SLIMIT/LIMIT — which the grammar applies
     to the whole set operation, not the last operand."""
     s = sql.strip().rstrip(";")
-    depth, i, cuts = 0, 0, []
-    pat = re.compile(r"\bUNION(\s+ALL)?\b", re.IGNORECASE)
-    while i < len(s):
-        ch = s[i]
-        if ch == "'":
-            j = s.find("'", i + 1)
-            i = len(s) if j < 0 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "uU":
-            m = pat.match(s, i)
-            if m:
-                cuts.append((i, m.end(), m.group(1) is not None))
-                i = m.end()
-                continue
-        i += 1
+    cuts = [
+        (m.start(), m.end(), m.group("all") is not None)
+        for m, depth in _scan(s, r"(?i:\bUNION(?P<all>\s+ALL)?\b)")
+        if depth == 0
+    ]
     if not cuts:
         return None
     all_flags = [c[2] for c in cuts]
@@ -3302,14 +3216,8 @@ def _extract_from_subquery(sql: str):
     m = re.search(r"\bFROM\s*\(", sql, flags=re.IGNORECASE)
     if not m:
         return None
-    depth, i = 1, m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = _close_paren(sql, m.end() - 1)
+    if i < 0:
         return None
     inner = sql[m.end() : i - 1].strip()
     am = re.match(
@@ -4170,13 +4078,9 @@ def _translate_inner(
             if not m2:
                 break
             lo = sql.index("(", m2.start())
-            depth, i = 1, lo + 1
-            while i < len(sql) and depth:
-                if sql[i] == "(":
-                    depth += 1
-                elif sql[i] == ")":
-                    depth -= 1
-                i += 1
+            i = _close_paren(sql, lo)
+            if i < 0:
+                i = len(sql)
             inner_sql = sql[lo + 1:i - 1]
             view = f"_dialect_sub_{abs(hash(inner_sql)) % 10**8}"
             translate(spark, db, inner_sql.strip(), ts_col
@@ -5408,27 +5312,9 @@ def _promote_floats(base, g):
 
 
 def _split_top_or(cond: str) -> "list[str]":
-    """Split on depth-0 OR (quote-aware)."""
-    parts, depth, buf, i, inq = [], 0, [], 0, False
-    low = cond.lower()
-    while i < len(cond):
-        ch = cond[i]
-        if ch == "'":
-            inq = not inq
-        elif not inq:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and low.startswith(" or ", i):
-                parts.append("".join(buf))
-                buf = []
-                i += 4
-                continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return parts
+    """Split on depth-0 OR outside quotes; one space on each side goes
+    with the OR, any other whitespace stays in the parts."""
+    return _split_depth0(cond, r"(?i: ?\bOR\b ?)")
 
 
 def _ts_bounds(where: "str | None", ts_col: str, allow_in: bool = True):
@@ -5508,7 +5394,7 @@ def _ts_bounds(where: "str | None", ts_col: str, allow_in: bool = True):
     in_re = re.compile(
         rf"^\s*{re.escape(ts_col)}\s+in\s*\(\s*(.+?)\s*\)\s*$", re.IGNORECASE
     )
-    for conj in _split_conjuncts(where):
+    for conj in _split_top_and(where):
         im = in_re.match(conj.strip())
         if im:
             if not allow_in:
@@ -6556,21 +6442,13 @@ def _parse_literal(tok: str):
 def _split_value_groups(text: str) -> list[list]:
     """``(a, b)(c, d), (e, f)`` → [[a,b],[c,d],[e,f]] (balanced-paren,
     quote-aware)."""
-    groups, depth, in_str, start = [], 0, False, None
-    for i, ch in enumerate(text):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                if depth == 0:
-                    start = i + 1
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    groups.append(
-                        [_parse_literal(t) for t in _split_select(text[start:i])]
-                    )
+    groups, start = [], 0
+    for m, depth in _scan(text):
+        if depth == 0 and m.lastgroup == "open":
+            start = m.end()
+        elif depth == 0:
+            items = _split_select(text[start:m.start()])
+            groups.append([_parse_literal(t) for t in items])
     return groups
 
 
@@ -6993,25 +6871,13 @@ def _split_depth0_segments(text: str) -> "list[str]":
     depth-0 identifier whose previous non-space character is ``)``,
     unless the identifier is a clause keyword (VALUES/TAGS/USING)."""
     segs, start = [], 0
-    depth, in_str, prev = 0, False, ""
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and prev == ")" and (ch.isalpha() or ch == "_"):
-                m = re.match(r"[\w.]+", text[i:])
-                if m and m.group(0).lower() not in _SEG_KEYWORDS:
-                    segs.append(text[start:i].strip())
-                    start = i
-        if not ch.isspace():
-            prev = ch
-        i += 1
+    # a name with the whitespace before it, so text[m.start() - 1] is
+    # the previous non-space character
+    for m, depth in _scan(text, r"\s*[^\W\d][\w.]*"):
+        if (depth == 0 and text[m.start() - 1:m.start()] == ")"
+                and m.group().lstrip().lower() not in _SEG_KEYWORDS):
+            segs.append(text[start:m.start()].strip())
+            start = m.start()
     segs.append(text[start:].strip())
     return [s for s in segs if s]
 
@@ -8376,23 +8242,8 @@ def _view_exists(spark: SparkSession, name: str) -> bool:
 
 
 def _split_select(select: str) -> list[str]:
-    items, depth, cur, in_str = [], 0, [], False
-    for ch in select:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if ch == "," and depth == 0 and not in_str:
-            items.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        items.append("".join(cur).strip())
-    return [i for i in items if i]
+    """Depth-0 comma items, stripped, empty ones dropped."""
+    return [t for p in _split_depth0(select) if (t := p.strip())]
 
 
 _AGG_RE = re.compile(
@@ -8435,19 +8286,12 @@ def _extract_agg_calls(
     new_pairs: list[tuple[str, str]] = []
     res = []
     i = 0
-    while True:
-        m = _AGG_CALL_RE.search(body, i)
-        if not m:
-            res.append(body[i:])
-            break
-        j = m.end()
-        depth = 1
-        while j < len(body) and depth:
-            if body[j] == "(":
-                depth += 1
-            elif body[j] == ")":
-                depth -= 1
-            j += 1
+    for m, _ in _scan(body, _AGG_CALL_RE):
+        if m.start() < i:  # nested in the call just taken
+            continue
+        j = _close_paren(body, m.end() - 1)
+        if j < 0:
+            j = len(body)
         call = body[m.start():j]
         key = re.sub(r"\s+", "", call).lower()
         name = registry.get(key)
@@ -8458,6 +8302,7 @@ def _extract_agg_calls(
         res.append(body[i:m.start()])
         res.append(name)
         i = j
+    res.append(body[i:])
     return "".join(res), new_pairs
 
 

@@ -3,34 +3,16 @@ grammar sql.y:1742-1791): push window events to an external endpoint
 from each micro-batch.
 
 Spark-first shape: a foreachBatch wrapper that extracts the batch's
-window events and hands them to a transport callback. The default
-transport is pluggable (HTTP POST via urllib when a URL is given, or
-any callable for tests) — the driver-side callback runs once per
+window events and hands them to a transport callback — any callable
+taking the list of event dicts. The driver-side callback runs once per
 micro-batch, not per row.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-
-
-def http_transport(url: str) -> Callable[[list[dict]], None]:
-    """POST events as a JSON array (stub-friendly: import inside)."""
-
-    def send(events: list[dict]) -> None:
-        import urllib.request
-
-        req = urllib.request.Request(
-            url,
-            data=json.dumps(events, default=str).encode(),
-            headers={"Content-Type": "application/json"},
-        )
-        urllib.request.urlopen(req, timeout=10)
-
-    return send
 
 
 def notify_on_close(

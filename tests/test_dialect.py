@@ -883,3 +883,77 @@ def test_interp_plan_build_starts_no_extra_job(spark, tmp_path):
     interp_jobs = jobs_to_build(_METERS_INTERP, "build_interp")
     read_jobs = jobs_to_build("SELECT * FROM meters", "build_read")
     assert interp_jobs <= read_jobs, (interp_jobs, read_jobs)
+
+
+def test_insert_double_quoted_literals(spark, tmp_path):
+    """A "…" literal is opaque to the VALUES and TAGS splits: a comma
+    inside it does not cut the row, a ' inside it does not open a
+    string."""
+    from tdengine_spark.dialect import execute
+
+    db = Database(root=str(tmp_path))
+    execute(
+        spark, db,
+        "INSERT INTO r (ts, name, v) VALUES "
+        "('2024-01-01 00:01:00', \"c,d\", 2)"
+        "('2024-01-01 00:02:00', \"it's\", 3)",
+    )
+    out = db.read(spark, "r").orderBy("ts").collect()
+    assert [(r.name, r.v) for r in out] == [("c,d", 2), ("it's", 3)]
+    execute(
+        spark, db,
+        "INSERT INTO d1 USING st (loc, note) TAGS (\"c,d\", \"it's\") "
+        "(ts, v) VALUES ('2024-01-01 00:00:00', 1)",
+    )
+    got = db.read(spark, "st").collect()
+    assert [(r.tbname, r.loc, r.note, r.v) for r in got] == [
+        ("d1", "c,d", "it's", 1)
+    ]
+
+
+def test_fill_range_over_or_with_any_whitespace(spark, tmp_path):
+    """The FILL range of an OR of ts ranges is the same whatever the
+    whitespace or parens around the OR."""
+    from tdengine_spark.dialect import execute
+
+    db = Database(root=str(tmp_path))
+    execute(
+        spark, db,
+        "INSERT INTO m (ts, v) VALUES ('2024-01-01 01:00:00', 1.0)"
+        "('2024-01-03 05:00:00', 2.0)",
+    )
+    lo1 = "ts >= '2024-01-03 00:00:00' and ts < '2024-01-03 12:00:00'"
+    lo2 = "ts >= '2024-01-01 00:00:00' and ts < '2024-01-01 12:00:00'"
+
+    def rows(where):
+        return sorted(translate(
+            spark, db,
+            f"SELECT _wstart, avg(v) FROM m WHERE {where} "
+            "INTERVAL(1h) FILL(NULL)",
+        ).collect())
+
+    want = rows(f"{lo1} or {lo2}")
+    assert len(want) == 60
+    for sep in ("\nor ", "\tor\t", " OR\n"):
+        assert rows(f"{lo1}{sep}{lo2}") == want, repr(sep)
+    assert rows(f"({lo1}) or ({lo2})") == want
+    assert rows(f"({lo1})or({lo2})") == want
+
+
+def test_join_subquery_lift_keeps_quoted_paren(spark, tmp_path):
+    """`JOIN (select …)` lifts the whole balanced subquery into a view;
+    a ) inside one of its literals does not end it."""
+    from tdengine_spark.dialect import execute
+
+    db = Database(root=str(tmp_path))
+    execute(
+        spark, db,
+        "INSERT INTO m (ts, v, s) VALUES ('2024-01-01 00:00:00', 1.0, 'a)')"
+        "('2024-01-01 00:01:00', 2.0, 'b')",
+    )
+    out = translate(
+        spark, db,
+        "select a.v, b.s from m a join (select ts, s from m "
+        "where s <> 'x)') b on a.ts = b.ts",
+    )
+    assert sorted(map(tuple, out.collect())) == [(1.0, "a)"), (2.0, "b")]
